@@ -1,29 +1,31 @@
 """``analytics_headline``: the 27 headline queries of the analytics
-registry, each materialized through the noop sink, after one warm pass over
-a small scale factor.
+registry, each materialized through the noop sink.
 
-This workload is not in ``BENCHMARK.json``: it reads the analytics parquet
-tables from a directory outside the repository, and one pass at sf0.1
-takes about a minute on 4 cores.  Run it by hand:
-
-    python3 perfbench/run.py --workload analytics_headline --seed 1 \\
-        --seconds 60 --trace 0 --sf-dir DATA/sf0.1 --warm-sf-dir DATA/sf0.001
-
-Outside the timed region, each query's result is compared with its DuckDB
-oracle, using the parity tool's own canonical form.  The traced run also
-reads Spark's event log for shuffle and spill bytes per query.
+The tables are generated from the seed (``tables.py``) at scale factor
+0.01, under the run's own directory.  The first pass runs each query cold
+and collects its result, which is compared with the query's DuckDB oracle
+on the same tables, using the parity tool's own canonical form; it is the
+warm pass and the correctness check in one, and it lies outside the timed
+region.  The timed passes then write each query, one at a time, to the
+noop sink.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import math
 import os
 import statistics
 import time
+from concurrent.futures import ThreadPoolExecutor
 
-from harness import noop_write
+from harness import SETUP_REPS, cpu_s, geomean, noop_write, task_metrics
+from stream_mixed import codec_layers
+from tables import write_tables
+
+SF = 0.01
+#: queries the untimed checked pass runs at once: a query's first run costs
+#: about twice a warm one, mostly on the driver, and overlapping them cuts
+#: the pass from about 50 s to about 37 s on 4 cores
+CHECK_THREADS = 3
 
 #: pinned copy of bench.HEADLINE, so editing bench.py cannot move the workload
 HEADLINE = (
@@ -39,14 +41,23 @@ HEADLINE = (
 )
 
 
-def _oracle_failures(spark, reg, sf_dir: str) -> dict[str, str]:
-    """Queries whose result differs from their DuckDB oracle, with why."""
+def _checked_pass(ctx, reg, sf_dir: str) -> dict[str, str]:
+    """Each query collected once, CHECK_THREADS at a time, and compared with
+    its DuckDB oracle; returns the queries that raised or differ, with why."""
     import duckdb
 
     from byte_convert_avro_spark.queries import oracle_sql
     from byte_convert_avro_spark.session import TABLES
     from tools.driver_parity import _table  # applies the tool's _canon per cell
 
+    def collect(name):
+        try:
+            return reg[name](ctx.spark, sf_dir).toPandas()
+        except Exception as e:  # noqa: BLE001 — one query's failure is a result
+            return e
+
+    with ctx.tracer.span("queries.checked_pass"), ThreadPoolExecutor(CHECK_THREADS) as pool:
+        results = dict(zip(HEADLINE, pool.map(collect, HEADLINE)))
     oracles = oracle_sql()
     con = duckdb.connect()
     for t in TABLES:
@@ -54,45 +65,17 @@ def _oracle_failures(spark, reg, sf_dir: str) -> dict[str, str]:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     bad = {}
-    for name in HEADLINE:
-        try:
-            sdf = reg[name](spark, sf_dir).toPandas()
-            sql = oracles.get(name)
-            if sql is None:
-                continue  # registered without an oracle: rows only
-            odf = con.execute(sql).df()
+    for name, sdf in results.items():
+        if isinstance(sdf, Exception):
+            bad[name] = repr(sdf)[:200]
+        elif name not in oracles:
+            bad[name] = "no oracle"
+        else:
+            odf = con.execute(oracles[name]).df()
             if sorted(sdf.columns) != sorted(odf.columns) or _table(sdf) != _table(odf):
                 bad[name] = f"differs from oracle ({len(sdf)} vs {len(odf)} rows)"
-        except Exception as e:  # noqa: BLE001 — one query's failure is a result
-            bad[name] = repr(e)[:200]
     con.close()
     return bad
-
-
-def _event_log_bytes(spark, events_dir: str) -> dict[str, dict[str, int]]:
-    """Shuffle-write and spill bytes per job group, from the event log
-    (Spark 4's rolling layout: ``eventlog_v2_<app>/events_<n>_<app>``)."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    group_of_stage: dict[int, str] = {}
-    out: dict[str, dict[str, int]] = {}
-    for path in sorted(glob.glob(os.path.join(events_dir, "*", "events_*"))):
-        with open(path, encoding="utf-8") as f:
-            for line in f:
-                ev = json.loads(line)
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
-                    for sid in ev["Stage IDs"]:
-                        group_of_stage[sid] = group
-                elif kind == "SparkListenerTaskEnd" and ev.get("Task Metrics"):
-                    group = group_of_stage.get(ev["Stage ID"])
-                    if group is None:
-                        continue
-                    m = ev["Task Metrics"]
-                    acc = out.setdefault(group, {"shuffle": 0, "spill": 0})
-                    acc["shuffle"] += m["Shuffle Write Metrics"]["Shuffle Bytes Written"]
-                    acc["spill"] += m["Memory Bytes Spilled"] + m["Disk Bytes Spilled"]
-    return out
 
 
 def run(ctx) -> dict:
@@ -104,58 +87,70 @@ def run(ctx) -> dict:
         raise SystemExit(f"headline queries missing from the registry: {missing}")
     spark, sc = ctx.spark, ctx.spark.sparkContext
 
+    gens = []
+    for rep in range(SETUP_REPS):
+        sf_dir = os.path.join(ctx.work, f"tables{rep}")
+        t0 = time.perf_counter()
+        rows = write_tables(ctx.seed, SF, sf_dir)
+        gens.append(time.perf_counter() - t0)
     t0 = time.perf_counter()
-    warm_failed = []
-    for name in HEADLINE:
-        try:
-            noop_write(reg[name](spark, ctx.warm_sf_dir))
-        except Exception:  # noqa: BLE001 — the timed pass records failures
-            warm_failed.append(name)
-    setups = [time.perf_counter() - t0]
+    wrong = _checked_pass(ctx, reg, sf_dir)
+    check_s = time.perf_counter() - t0
+    # set-up ends at the first timed pass: tables, then the checked warm pass
+    setups = [g + check_s for g in gens]
 
     walls: dict[str, list[float]] = {n: [] for n in HEADLINE}
+    windows: list[tuple[float, float]] = []
     raised: set[str] = set()
     t_end = time.perf_counter() + ctx.seconds
-    passes = 0
-    while passes == 0 or time.perf_counter() < t_end:
-        for name in HEADLINE:
-            sc.setJobGroup(name, name)
-            t0 = time.perf_counter()
-            with ctx.tracer.span(f"queries.{name}"):
-                try:
-                    noop_write(reg[name](spark, ctx.sf_dir))
-                except Exception:  # noqa: BLE001 — counted in failed
-                    raised.add(name)
-            walls[name].append(time.perf_counter() - t0)
-        passes += 1
+    cpu0 = cpu_s([ctx.jvm_pid])
+    while not windows or time.perf_counter() < t_end:
+        w0 = time.time()
+        with ctx.tracer.span("timed_region"):
+            for name in HEADLINE:
+                sc.setJobGroup(name, name)
+                t0 = time.perf_counter()
+                with ctx.tracer.span(f"queries.{name}"):
+                    try:
+                        noop_write(reg[name](spark, sf_dir))
+                    except Exception:  # noqa: BLE001 — counted in failed
+                        raised.add(name)
+                walls[name].append(time.perf_counter() - t0)
+        windows.append((w0, time.time()))
         ctx.stop_rss()  # the peak-RSS window closes after the first pass
+    pass_cpu_s = (cpu_s([ctx.jvm_pid]) - cpu0) / len(windows)
     sc.setLocalProperty("spark.jobGroup.id", None)
 
-    layers = {}
-    if ctx.traced:
-        by_group = _event_log_bytes(spark, ctx.events_dir)
-        for name in HEADLINE:
-            layers[f"queries.{name}.wall_s"] = statistics.median(walls[name])
-            layers[f"queries.{name}.shuffle_bytes"] = by_group.get(name, {}).get("shuffle", 0) / passes
-        layers["queries.spill_bytes"] = sum(g["spill"] for g in by_group.values()) / passes
-
-    wrong = _oracle_failures(spark, reg, ctx.sf_dir)
+    med = {n: statistics.median(walls[n]) for n in HEADLINE}
+    total = sum(med.values())
     failed = raised | set(wrong)
-    med = [statistics.median(walls[n]) for n in HEADLINE]
+    report = {
+        "tables": rows,
+        "passes": len(windows),
+        "setup.tables_s": statistics.median(gens),
+        "setup.checked_pass_s": check_s,
+        "analytics_total_s": total,
+        "analytics_geomean_s": geomean(list(med.values())),
+        "failed_queries": {n: wrong.get(n, "raised") for n in sorted(failed)},
+        **{f"queries.{n}.wall_s": m for n, m in med.items()},
+    }
+    layers = {"trace.pass_s": total}
+    if ctx.traced:
+        tm, by_group = task_metrics(spark, ctx.events_dir, windows)
+        layers.update(tm)
+        layers.update(codec_layers(ctx))
+        report.update({f"queries.{n}.shuffle_bytes": by_group.get(n, 0) for n in HEADLINE})
     return {
         "setups": setups,
         "e2e": {
-            "analytics_total_s": sum(med),
-            "analytics_geomean_s": math.exp(statistics.mean(math.log(m) for m in med)),
+            "pass_s": total,
+            "op_geomean_ms": geomean(list(med.values())) * 1e3,
+            "pass_cpu_s": pass_cpu_s,
+            "referee_match_share": 1 - len(wrong) / len(HEADLINE),
         },
         "layers": layers,
         "attempted": len(HEADLINE),
         "failed": len(failed),
         "correct": not failed,
-        "report": {
-            "passes": passes,
-            "warm_failed": warm_failed,
-            "failed_queries": {n: wrong.get(n, "raised") for n in sorted(failed)},
-            **({} if ctx.traced else {f"queries.{n}.wall_s": m for n, m in zip(HEADLINE, med)}),
-        },
+        "report": report,
     }

@@ -331,7 +331,9 @@ def mixed_corpus(seed: int, n_ids: int, n_values: int, n_keys: int, n_files: int
     records drawn Zipf(1) over rank.  Each file holds the same mix: 20%
     disabled-topic rows, 3% tombstones, 2% hostile payloads split evenly over
     the five error classes, the rest split between the keyed and the plain
-    topic."""
+    topic.  Of these, only the 2% hostile share and the Zipf skew are given
+    by the workload's definition; the other shares are assumptions, listed
+    in README.md."""
     rng = random.Random(seed)
     dbls = [Doubles(rng) for _ in range(N_TEMPLATES)]  # one evenly spread sequence each
     made = [0] * N_TEMPLATES

@@ -3,7 +3,9 @@ summary statistics."""
 
 from __future__ import annotations
 
+import glob
 import json
+import math
 import os
 import statistics
 import subprocess
@@ -88,6 +90,23 @@ def _rss_bytes(pids: list[int]) -> int:
     return total * os.sysconf("SC_PAGE_SIZE")
 
 
+def cpu_s(roots: list[int]) -> float:
+    """User plus system CPU seconds of ``roots`` and every process below
+    them, counting the children they have reaped.  Steal time is not
+    charged to a process, so this reads steadier than wall time on a busy
+    host."""
+    ticks = 0
+    for pid in {p for r in roots for p in _descendants(r)}:
+        try:
+            with open(f"/proc/{pid}/stat", "rb") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        fields = stat[stat.rindex(b")") + 2:].split()
+        ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+    return ticks / os.sysconf("SC_CLK_TCK")
+
+
 class RssSampler:
     """Samples the summed RSS of the Spark driver JVM and its Python workers
     every 100 ms on a background thread; ``peak_mb`` is the highest sample.
@@ -119,6 +138,13 @@ class RssSampler:
         self._stop.set()
         self._thread.join(timeout=5)
         return self.peak / 2**20
+
+
+def cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) jiffies of all CPUs so far, from /proc/stat."""
+    with open("/proc/stat", encoding="ascii") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return fields[7], sum(fields[:8])
 
 
 def stop_session(spark, timeout: float = 60.0) -> None:
@@ -175,12 +201,15 @@ class Registry:
         self.proc.stdout.close()
 
 
-def registry_metrics(stats: dict) -> dict:
+def registry_metrics(stats: dict, passes: int) -> dict:
+    """What the registry counted, per timed pass: the counters cover all
+    ``passes`` of the timed region, so a faster engine that fits more passes
+    in does not report more fetches."""
     fetches = sum(stats["fetches"].values())
     return {
-        "schema_store.fetches": fetches,
-        "schema_store.fetches_per_distinct_id": fetches / max(1, len(stats["fetches"])),
-        "schema_store.not_found": stats["not_found"],
+        "schema_store.fetches": fetches / passes,
+        "schema_store.fetches_per_distinct_id": fetches / max(1, len(stats["fetches"])) / passes,
+        "schema_store.not_found": stats["not_found"] / passes,
         "schema_store.fetch_ms_p50": statistics.median(stats["fetch_ms"]) if stats["fetch_ms"] else 0.0,
     }
 
@@ -192,6 +221,49 @@ def tail(samples: list[float]) -> tuple[float, int] | None:
     if n < 11:
         return None
     return sorted(samples)[n - 11], (100 * (n - 10)) // n
+
+
+def geomean(xs: list[float]) -> float:
+    return math.exp(statistics.mean(math.log(x) for x in xs))
+
+
+def task_metrics(spark, events_dir: str, windows: list[tuple[float, float]],
+                 passes: int | None = None) -> tuple[dict, dict[str, float]]:
+    """Spark task metrics per timed pass, from the event log: the tasks
+    launched inside ``windows`` (epoch-second (start, end) pairs), summed
+    and divided by ``passes`` (default: one pass per window).  Also returns
+    shuffle bytes per job group, per pass."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    group_of_stage: dict[int, str | None] = {}
+    totals = {"cpu_s": 0.0, "gc_ms": 0.0, "shuffle_bytes": 0, "spill_bytes": 0, "tasks": 0}
+    by_group: dict[str, int] = {}
+    paths = [p for p in glob.glob(os.path.join(events_dir, "**"), recursive=True) if os.path.isfile(p)]
+    for path in sorted(paths):
+        with open(path, encoding="utf-8") as f:
+            for line in f:
+                ev = json.loads(line)
+                kind = ev.get("Event")
+                if kind == "SparkListenerJobStart":
+                    group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
+                    for sid in ev["Stage IDs"]:
+                        group_of_stage[sid] = group
+                elif kind == "SparkListenerTaskEnd" and ev.get("Task Metrics"):
+                    launch = ev["Task Info"]["Launch Time"] / 1e3
+                    if not any(a <= launch <= b for a, b in windows):
+                        continue
+                    m = ev["Task Metrics"]
+                    shuffle = m["Shuffle Write Metrics"]["Shuffle Bytes Written"]
+                    totals["cpu_s"] += m["Executor CPU Time"] / 1e9
+                    totals["gc_ms"] += m["JVM GC Time"]
+                    totals["shuffle_bytes"] += shuffle
+                    totals["spill_bytes"] += m["Memory Bytes Spilled"] + m["Disk Bytes Spilled"]
+                    totals["tasks"] += 1
+                    group = group_of_stage.get(ev["Stage ID"])
+                    if group is not None:
+                        by_group[group] = by_group.get(group, 0) + shuffle
+    n = passes or len(windows)
+    return ({f"spark.{k}": v / n for k, v in totals.items()},
+            {g: b / n for g, b in by_group.items()})
 
 
 def timed_until(seconds: float, fn, minimum: int) -> list[float]:

@@ -1,25 +1,25 @@
 """The repository's benchmark: one command, run from the repository root.
 
-    python3 perfbench/run.py --workload decode_flat --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload stream_mixed --seed 1 --seconds 15 --trace 0
 
-Workloads (``BENCHMARK.json`` lists the first two with the metrics their
-runs print):
+Workloads (``BENCHMARK.json`` declares the first two):
 
-- ``decode_flat``  batch ``Engine.transform`` over one hot flat schema
 - ``stream_mixed`` a Structured Streaming drain of a mixed, hostile backlog
   served by a local schema-registry process
-- ``analytics_headline`` the 27 headline analytics queries; needs
-  ``--sf-dir`` and ``--warm-sf-dir`` (see ``analytics.py``)
+- ``analytics_headline`` the 27 headline analytics queries over seeded
+  tables
+- ``decode_flat`` batch ``Engine.transform`` over one hot flat schema; run
+  by hand and by ``test_guard.py``
 
 ``--trace 0`` prints the end-to-end metrics.  ``--trace 1`` runs the same
-workload with spans recorded around calls into each layer, plus extra jobs
-and loops that split the work by layer, and prints the per-layer metrics;
-its spans go to ``.perfbench_run/spans/``.  Its ``trace.decode_rec_s``
-against ``decode_rec_s`` of an untraced run with the same seed is the
-tracing overhead.  Every run checks the engine's
-outputs; the last stdout line is one JSON object with ``correct``,
-``attempted``, ``failed`` and ``metrics``, and the lines before it show
-every metric the run measured, by name and unit.
+workload with spans recorded around calls into each layer and Spark's event
+log on, plus extra jobs and loops that split the work by layer, and prints
+the per-layer metrics; its spans go to ``.perfbench_run/spans/``.  Its
+``trace.pass_s`` against ``pass_s`` of an untraced run with the same seed
+is the tracing overhead.  Every run checks the engine's outputs; the last
+stdout line is one JSON object with ``correct``, ``attempted``, ``failed``
+and ``metrics``, and the lines before it show every figure the run
+measured, by name and unit.
 
 Everything the run writes stays under ``.perfbench_run/`` in the current
 directory, and is removed at the end except the spans.
@@ -42,15 +42,18 @@ from dataclasses import dataclass  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.getcwd()
 
-#: units of the metrics only the report lines show
+#: units of the figures only the report lines show
 REPORT_UNITS = {
-    "layers.split_s": "s", "microbatch_tail_ms": "ms", "legacy.count_rec_s": "rec/s",
-    "referee_mismatch_share": "share", "pass_s": "s",
-    "schema_store.not_found": "count", "analytics_total_s": "s", "analytics_geomean_s": "s",
-    "queries.spill_bytes": "B",
+    "decode_rec_s": "rec/s", "legacy.count_rec_s": "rec/s", "microbatch_p50_ms": "ms",
+    "microbatch_tail_ms": "ms", "referee_mismatch_share": "share", "passes_s": "s",
+    "drain_s": "s", "engine.transform_call_ms": "ms", "schema_store.fetches": "count",
+    "schema_store.fetches_per_distinct_id": "ratio", "schema_store.not_found": "count",
+    "schema_store.fetch_ms_p50": "ms", "streaming.add_batch_ms_p50": "ms",
+    "streaming.planning_ms_p50": "ms", "streaming.get_batch_ms_p50": "ms",
+    "streaming.commit_ms_p50": "ms", "host.steal_share": "share",
 }
-WORKLOADS = {"decode_flat": "decode_flat", "stream_mixed": "stream_mixed",
-             "analytics_headline": "analytics"}
+WORKLOADS = {"stream_mixed": "stream_mixed", "analytics_headline": "analytics",
+             "decode_flat": "decode_flat"}
 
 
 @dataclass
@@ -63,8 +66,7 @@ class Ctx:
     work: str
     tracer: object
     rss: object
-    sf_dir: str | None = None
-    warm_sf_dir: str | None = None
+    jvm_pid: int
     events_dir: str | None = None
     peak_rss_mb: float = 0.0
 
@@ -121,12 +123,7 @@ def main() -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--sf-dir", help="analytics_headline: the timed tables' directory")
-    ap.add_argument("--warm-sf-dir", help="analytics_headline: the warm pass's tables")
     args = ap.parse_args()
-    analytics = args.workload == "analytics_headline"
-    if analytics and not (args.sf_dir and args.warm_sf_dir):
-        ap.error("analytics_headline needs --sf-dir and --warm-sf-dir")
 
     if not os.path.isdir(os.path.join(ROOT, "byte_convert_avro_spark")):
         print("perfbench: run from the repository root; byte_convert_avro_spark/ "
@@ -138,11 +135,11 @@ def main() -> int:
     runs = os.path.join(ROOT, ".perfbench_run")
     run_id = f"{args.workload}-s{args.seed}-t{args.trace}-{os.getpid()}"
     work = os.path.join(runs, run_id)
-    events_dir = os.path.join(work, "events") if analytics and args.trace else None
+    events_dir = os.path.join(work, "events") if args.trace else None
     _prepare_env(work, events_dir)
 
     from byte_convert_avro_spark.session import get_spark
-    from harness import RssSampler, Tracer, stop_session
+    from harness import RssSampler, Tracer, cpu_jiffies, stop_session
 
     tracer = Tracer(bool(args.trace), run_id)
     spark = None
@@ -151,12 +148,14 @@ def main() -> int:
             spark = get_spark("perfbench", cpus=min(4, len(os.sched_getaffinity(0))))
         spark.sparkContext.setLogLevel("ERROR")
         session_s = time.perf_counter() - T_START
-        rss = RssSampler(spark._jvm.ProcessHandle.current().pid()).start()
+        jvm_pid = spark._jvm.ProcessHandle.current().pid()
+        rss = RssSampler(jvm_pid).start()
         ctx = Ctx(spark, args.seed, args.seconds, bool(args.trace),
-                  spark.sparkContext.defaultParallelism, work, tracer, rss,
-                  args.sf_dir, args.warm_sf_dir, events_dir)
+                  spark.sparkContext.defaultParallelism, work, tracer, rss, jvm_pid, events_dir)
         module = __import__(WORKLOADS[args.workload])
+        steal0, total0 = cpu_jiffies()
         res = module.run(ctx)
+        steal1, total1 = cpu_jiffies()
         ctx.stop_rss()
     finally:
         if spark is not None:
@@ -165,9 +164,12 @@ def main() -> int:
 
     e2e = {"setup_s": session_s + statistics.median(res["setups"]), **res["e2e"]}
     layers = {"session.start_s": session_s, **res["layers"], "peak_rss_mb": ctx.peak_rss_mb}
+    report = res["report"]
+    # hypervisor steal over the workload: wall-clock figures read slower when high
+    report["host.steal_share"] = (steal1 - steal0) / max(1, total1 - total0)
     if args.trace:
-        if not analytics:
-            layers["engine.transform_call_ms"] = tracer.median_s("engine.transform_call") * 1e3
+        if tracer.seconds("engine.transform_call"):
+            report["engine.transform_call_ms"] = tracer.median_s("engine.transform_call") * 1e3
         os.makedirs(os.path.join(runs, "spans"), exist_ok=True)
         tracer.write(os.path.join(runs, "spans", f"{run_id}.jsonl"))
 
@@ -177,22 +179,23 @@ def main() -> int:
         print(f"{name} {_fmt(v)} {units[name]}")
     print(f"failed_share {_fmt(res['failed'] / res['attempted'])} share "
           f"({res['failed']}/{res['attempted']})")
-    for name, v in sorted(res["report"].items()):
+    for name, v in sorted(report.items()):
         print(f"{name} {_fmt(v)} {_unit(name, units)}".rstrip())
     if args.trace:
-        for name in sorted(layers.keys() - res["report"].keys()):
+        for name in sorted(layers):
             print(f"{name} {_fmt(layers[name])} {_unit(name, units)}".rstrip())
 
-    if analytics:
-        shown = {n: (v, _unit(n, units)) for n, v in (layers if args.trace else e2e).items()}
-    else:
-        measured = {**e2e, **layers}
-        shown = {n: (measured[n], u) for n, u in (per_layer if args.trace else end_to_end).items()}
+    measured = {**e2e, **layers}
+    declared = per_layer if args.trace else end_to_end
+    missing = declared.keys() - measured.keys()
+    if missing:
+        print(f"perfbench: {args.workload} did not measure {sorted(missing)}", file=sys.stderr)
+        return 3
     print(json.dumps({
         "correct": bool(res["correct"]),
         "attempted": int(res["attempted"]),
         "failed": int(res["failed"]),
-        "metrics": {n: {"value": float(v), "unit": u} for n, (v, u) in shown.items()},
+        "metrics": {n: {"value": float(measured[n]), "unit": u} for n, u in declared.items()},
     }))
     return 0
 
