@@ -2,12 +2,11 @@
 Avro-JSON encode), implemented from the public Avro 1.11 specification
 (https://avro.apache.org/docs/current/specification/).
 
-The container ships no ``fastavro``/``avro`` wheel and no ``spark-avro``
-connector jar, so the engine carries its own minimal generic codec.  On a
-real cluster with ``org.apache.spark:spark-avro`` on the classpath the
-single-schema fast path should use native ``from_avro`` instead (see
-``decoder.py``); this codec is the general per-record-schema path the
-reference implements with ``GenericDatumReader`` (AvroTransform.java:241-243).
+No ``fastavro``/``avro`` wheel is installed and no ``spark-avro``
+connector jar is on the classpath, so the engine carries its own minimal
+generic codec.  It is the per-record-schema path the reference implements
+with ``GenericDatumReader`` (AvroTransform.java:241-243), and the decode
+UDF in ``decoder.py`` is its one caller on the hot path.
 """
 
 from byte_convert_avro_spark.avro.schema import AvroSchema, parse_schema

@@ -29,11 +29,11 @@ ensure_ascii=False)`` — the specification path in ``jsonenc.py``.
 from __future__ import annotations
 
 import json
-import math
 import struct
 from json.encoder import encode_basestring as _esc
 
 from byte_convert_avro_spark.avro.binary import TruncatedPayloadError
+from byte_convert_avro_spark.avro.jsonenc import _write_float
 from byte_convert_avro_spark.avro.schema import AvroSchema
 
 _unpack_float = struct.Struct("<f").unpack_from
@@ -63,17 +63,6 @@ _VARINT = """
         shift += 7
     {out} = (n >> 1) ^ -(n & 1)
 """
-
-
-def _wf(v: float) -> str:
-    """float -> JSON text with Java-literal NaN/Inf parity (jsonenc rules)."""
-    if v != v:
-        return '"NaN"'
-    if v == math.inf:
-        return '"Infinity"'
-    if v == -math.inf:
-        return '"-Infinity"'
-    return repr(v)
 
 
 def _primitive_snippet(name: str, out_var: str) -> str | None:
@@ -279,7 +268,7 @@ def compile_fused(schema: AvroSchema):
         "_unpack_float": _unpack_float,
         "_unpack_double": _unpack_double,
         "_esc": _esc,
-        "_wf": _wf,
+        "_wf": _write_float,  # one float formatter for both compiled paths
         "_trunc": _trunc,
         "_bad_union": _bad_union,
         **consts,

@@ -24,10 +24,9 @@ executor process via ``CachedParser`` (reference: synchronized LRU across
 Connect task threads, AvroTransform.java:108; Python workers are processes,
 so a per-process memo is the equivalent).
 
-On a cluster with ``spark-avro`` available, single-schema topics should use
-native ``from_avro`` on ``wire.body(col)`` instead — that keeps the whole
-stage in codegen.  This container has no spark-avro jar, so the general
-path is the only path; it remains the only non-codegen operator in the
+This UDF is the engine's one decode path, for batch and streaming alike,
+as the reference's ``GenericDatumReader`` -> ``JsonEncoder`` is
+(AvroTransform.java:239-252).  It is the only non-codegen operator in the
 pipeline (BASELINE.md engineering budget).
 """
 

@@ -88,7 +88,7 @@ def minhash_signatures(
     minima into each band signature: P(unrelated docs share a band sig)
     drops ~quadratically at r=2 while a true near-dup pair still matches
     a band with probability J^r.  Why it matters at scale (measured,
-    BENCH_r9_organic_recall.json): at r=1 on a low-entropy corpus the
+    tools/organic_recall_stress.py): at r=1 on a low-entropy corpus the
     hottest band signatures are shared by a growing fraction of the
     WHOLE corpus, so bucket sizes grow with corpus size and any absolute
     ``max_docs_per_bucket`` cap drops an increasing share of REAL
@@ -413,6 +413,10 @@ def jaccard_similarity(
     (doc_a, doc_b).  Verification stage after LSH — cost scales with the
     candidate set, not the corpus.  -> (doc_a, doc_b, n_common, n_a, n_b,
     jaccard)
+
+    ``pairs`` must be a DISTINCT pair set: each input row yields one
+    output row, so a duplicated (doc_a, doc_b) pair is scored and emitted
+    twice.  ``lsh_candidates`` output is one row per pair, so it qualifies.
 
     Scale: each document's distinct shingles are aggregated ONCE into an
     array (one shuffle on the doc id, map-side partial ``collect_set``;

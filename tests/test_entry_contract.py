@@ -162,7 +162,7 @@ def test_every_public_operator_is_reachable():
         consumers |= referenced_names(f)
     for f in (repo / "tools").glob("*.py"):
         consumers |= referenced_names(f)
-    for name in ("__spark_entry__.py", "bench.py", "bench_decode.py"):
+    for name in ("__spark_entry__.py", "bench.py"):
         p = repo / name
         if p.exists():
             consumers |= referenced_names(p)
@@ -178,3 +178,22 @@ def test_every_public_operator_is_reachable():
     assert not orphans, (
         f"public operators with no registry query, test, or caller: {orphans}"
     )
+
+
+def test_bench_run_contract(spark, sf_dir):
+    """``bench.run`` returns the one-line JSON contract and writes no file
+    into the checkout."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
+    import bench
+
+    name = "q6_forecast_revenue"
+    assert name in bench.HEADLINE
+    before = sorted(os.listdir(repo))
+    out = bench.run(spark, [name], sf_dir, runs=1)
+    assert sorted(os.listdir(repo)) == before
+    assert {"metric", "value", "unit", "runs_per_query", "queries", "sf"} <= set(out)
+    assert out["runs_per_query"] == 1
+    assert list(out["queries"]) == [name]
+    assert out["value"] == out["queries"][name] > 0
+    assert out["sf"] == 0.001
